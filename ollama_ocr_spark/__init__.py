@@ -16,4 +16,10 @@ Everything here is built from public knowledge: the PySpark API and the
 observable behavior of the reference repo.
 """
 
+from . import _zipcache
+
 __version__ = "0.1.0"
+
+# Every Python worker imports this package when it unpickles an engine
+# kernel, and a reused worker keeps the patch for its later tasks.
+_zipcache.install()

@@ -14,7 +14,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.extract import extract_stage
@@ -102,19 +102,27 @@ def run_extract(
     # One shuffle total: url-hash repartition both balances the payload
     # bytes per task AND satisfies the dedup window's required distribution
     # (Catalyst inserts no second exchange — see operators.maintenance).
-    deduped = latest_capture(balance_by_url(pages, num_partitions))
+    # latest_capture keeps exactly one row per url, so the rows counted
+    # here, before the resume anti-join, are the unique documents in the
+    # input: the results append below runs this node, and no extra SQL
+    # execution re-reads the corpus for the stat.
+    docs_in = Observation()
+    deduped = latest_capture(balance_by_url(pages, num_partitions)).observe(
+        docs_in, F.count(F.lit(1)).alias("n")
+    )
 
     done = results_tbl.read(spark)
     todo = resume_anti_join(deduped, done) if done is not None else deduped
 
-    results = extract_stage(todo)
-
     # One pass computes results + lineage: cache the (small, text-only)
-    # extraction output, not the raw html.
-    results = results.persist()
+    # extraction output, not the raw html. The observed append fills the
+    # cache that partition_lineage then reads.
+    docs_extracted = Observation()
+    results = extract_stage(todo).persist()
     try:
-        docs_extracted = results.count()
-        snapshot_id = results_tbl.append(results)
+        snapshot_id = results_tbl.append(
+            results.observe(docs_extracted, F.count(F.lit(1)).alias("n"))
+        )
 
         lineage = partition_lineage(results).withColumn(
             "snapshot_id", F.lit(snapshot_id)
@@ -123,14 +131,9 @@ def run_extract(
     finally:
         results.unpersist()
 
-    # docs_in = unique documents in the input. Counting `deduped` would
-    # RE-EXECUTE the payload repartition + dedup window (a second full
-    # pass over the corpus, just for a stat); the distinct-url count is
-    # the same number from a column-pruned scan that never touches html.
-    docs_in = pages.select("url").distinct().count()
     return RunStats(
-        docs_in=docs_in,
-        docs_extracted=docs_extracted,
+        docs_in=docs_in.get["n"],
+        docs_extracted=docs_extracted.get["n"],
         snapshot_id=snapshot_id,
         wall_secs=time.monotonic() - t0,
     )

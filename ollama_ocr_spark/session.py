@@ -36,9 +36,23 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _host_driver_memory() -> str:
+    """A quarter of this host's memory, in whole GiB between 1g and 4g."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                kib = int(line.split()[1])
+                return f"{max(1, min(4, kib // (4 << 20)))}g"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(app: str = "ollama_ocr_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Session sized from this host unless told otherwise: ``master`` /
+    ``SPARK_GRAFT_CPUS`` default to the cores this process may run on, and
+    ``SPARK_DRIVER_MEM`` to :func:`_host_driver_memory`."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or cpus
     builder = (
@@ -58,7 +72,8 @@ def get_spark(app: str = "ollama_ocr_spark", master: str | None = None,
         # repartition for pathological payloads)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _host_driver_memory())
     )
     # Operator-level overrides / experiment knobs, e.g.
     # SPARK_GRAFT_CONF="spark.shuffle.compress=false;spark.io.compression.codec=zstd"

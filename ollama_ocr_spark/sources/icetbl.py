@@ -135,11 +135,17 @@ class IceTable:
             os.unlink(tmp)
 
     # -- read path -----------------------------------------------------------
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame | None:
+    def read(self, spark: SparkSession, snapshot_id: int | None = None,
+             merge_schema: bool = False) -> DataFrame | None:
+        """Read a snapshot; ``merge_schema`` unions the columns of all its
+        files, for tables whose appends added a column over time."""
         snap = self.snapshot(snapshot_id)
         if snap is None or not snap.files:
             return None
-        return spark.read.parquet(*snap.files)
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*snap.files)
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots analogs) --
     def compact(self, spark: SparkSession, target_files: int = 1) -> int | None:

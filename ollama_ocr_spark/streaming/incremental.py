@@ -576,6 +576,21 @@ def _last_events_per_user(df: DataFrame) -> DataFrame:
     )
 
 
+def _prior_state(spark: SparkSession, state_tbl: IceTable,
+                 batch_id: int) -> DataFrame | None:
+    """The carried-state rows a micro-batch may see: every state row
+    committed by an EARLIER batch. Rows written before batch_id stamping
+    existed are prior state by construction; the log is read with
+    ``mergeSchema`` because after the first stamped commit on such a table
+    it mixes files with and without the column, and a schema inferred
+    from one file would either drop the column or the legacy rows."""
+    log = state_tbl.read(spark, merge_schema=True)
+    if log is None or "batch_id" not in log.columns:
+        return log
+    return log.filter(F.coalesce(F.col("batch_id"), F.lit(-1))
+                      < F.lit(batch_id))
+
+
 def _transitions_commit(spark: SparkSession, batch_df: DataFrame,
                         batch_id: int, matrix_tbl: IceTable,
                         state_tbl: IceTable) -> None:
@@ -592,14 +607,8 @@ def _transitions_commit(spark: SparkSession, batch_df: DataFrame,
     from ..operators.reports import _transition_pairs
 
     base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
-    state_log = state_tbl.read(spark)
-    if state_log is not None:
-        # a state log written before batch_id stamping existed has no
-        # batch_id column — all of it is prior state by construction
-        prior = (
-            state_log.filter(F.col("batch_id") < F.lit(batch_id))
-            if "batch_id" in state_log.columns else state_log
-        )
+    prior = _prior_state(spark, state_tbl, batch_id)
+    if prior is not None:
         carried = _last_events_per_user(prior).join(
             base.select("user_id").distinct(), "user_id", "left_semi"
         )
@@ -723,13 +732,8 @@ def _interevent_commit(spark: SparkSession, batch_df: DataFrame,
     from ..operators.reports import _gap_buckets
 
     base = batch_df.select("user_id", "event_id", "event_type", "ts_us")
-    state_log = state_tbl.read(spark)
-    if state_log is not None:
-        # pre-stamping state logs have no batch_id column — all prior
-        prior = (
-            state_log.filter(F.col("batch_id") < F.lit(batch_id))
-            if "batch_id" in state_log.columns else state_log
-        )
+    prior = _prior_state(spark, state_tbl, batch_id)
+    if prior is not None:
         carried = _last_events_per_user_type(prior).join(
             base.select("user_id", "event_type").distinct(),
             ["user_id", "event_type"], "left_semi",

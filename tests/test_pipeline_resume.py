@@ -209,6 +209,7 @@ def test_pipeline_resume_no_duplicates(spark, documents_smoke, tmp_path):
     # Idempotent re-run: nothing left to do, no new rows.
     s3 = run_extract(spark, pages_all, results_tbl, metrics_tbl)
     assert s3.docs_extracted == 0
+    assert s3.docs_in == documents_smoke.count()  # counted before resume
     assert results_tbl.read(spark).count() == documents_smoke.count()
 
     # Lineage rows reference their results snapshot and cover all docs.
@@ -218,6 +219,28 @@ def test_pipeline_resume_no_duplicates(spark, documents_smoke, tmp_path):
     total = metrics.agg(F.sum("doc_count")).collect()[0][0]
     assert total == documents_smoke.count()
     assert metrics.filter(F.col("checksum").isNull()).count() == 0
+
+
+def test_run_extract_empty_input_returns_promptly(spark, documents_smoke,
+                                                  tmp_path):
+    """Both counts come from observed metrics, which a caller waits for:
+    with no input pages the observed nodes must still run and report 0."""
+    import threading
+
+    pages = synthesize_stage(documents_smoke.filter("doc_id < 0"))
+    out = {}
+
+    def run():
+        out["stats"] = run_extract(spark, pages,
+                                   IceTable(str(tmp_path / "results")),
+                                   IceTable(str(tmp_path / "metrics")))
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "run_extract blocked on an empty input"
+    stats = out["stats"]
+    assert (stats.docs_in, stats.docs_extracted) == (0, 0)
 
 
 def test_snapshot_lifecycle_report_rows(spark, tmp_path):

@@ -603,3 +603,39 @@ def test_interevent_commit_replay_after_state_append(spark, tmp_path):
     assert got[("click", 11)] == 1     # the cross-batch 1024s gap, once
     # the polluted-replay artifact would be a zero-second gap (bucket 1)
     assert ("click", 1) not in got
+
+
+def test_transitions_commit_replay_over_mixed_legacy_state_log(spark, tmp_path):
+    """A state log written before batch_id stamping, then one stamped
+    commit: the log now mixes files with and without the column. A read
+    that infers the schema from one file either loses the column (the
+    replay sees its own state: a spurious (c, c)) or reads the legacy
+    rows' batch_id as NULL and drops them (the carried state is lost:
+    no (b, c) or (a, a)). Legacy rows must count as prior state."""
+    from ollama_ocr_spark.operators.reports import event_transitions
+    from ollama_ocr_spark.streaming.incremental import (
+        _last_events_per_user,
+        _transitions_commit,
+        read_transition_matrix,
+    )
+
+    cols = ["user_id", "event_id", "event_type", "ts_us"]
+    b1 = spark.createDataFrame(
+        [(1, 1, "a", 100), (1, 2, "b", 200), (2, 1, "a", 150)], cols)
+    b2 = spark.createDataFrame(
+        [(1, 3, "c", 300), (2, 2, "a", 250)], cols)
+    matrix = IceTable(str(tmp_path / "matrix"))
+    state = IceTable(str(tmp_path / "state"))
+
+    # batch 0 committed by a pre-stamping writer: unstamped state rows
+    _transitions_commit(spark, b1, 0, matrix, IceTable(str(tmp_path / "x")))
+    state.append(_last_events_per_user(b1))
+    _transitions_commit(spark, b2, 1, matrix, state)
+    _transitions_commit(spark, b2, 1, matrix, state)  # at-least-once replay
+
+    want = {(r["from_type"], r["to_type"]): r["n_transitions"]
+            for r in event_transitions(b1.unionByName(b2)).collect()}
+    got = {(r["from_type"], r["to_type"]): r["n_transitions"]
+           for r in read_transition_matrix(spark, matrix).collect()}
+    assert got == want
+    assert ("c", "c") not in got and got[("b", "c")] == 1
