@@ -1,64 +1,43 @@
-"""Benchmark driver: extraction throughput + headline queries + N→4N scaling.
+"""Benchmark: extract throughput, the query registry, N→4N scaling.
 
-The LAST stdout line is a compact (<1.5 KB) JSON object:
-  {"metric": "...", "value": <headline suite secs>, "unit": "sec",
-   "queries": {...headline per-query secs...}, "sf": ...,
-   "extract_docs_per_sec": {...best docs/sec per parallelism level...},
-   "scaling_efficiency": ..., "scaling_per_trial": [...],
-   "scaling_median": ..., "extras_timed": N, "extras_skipped": N,
-   "bench_wall_secs": ...}
-Detail lines (full extras maps, runs arrays, scaling_note prose) print
-earlier — see "Budget discipline" below for the exact line protocol.
+Every choice comes from the host or from ``__spark_entry__.queries()``:
 
-Method:
-- The pages corpus (deterministic function of documents.parquet, replicated
-  REPL× for volume) is materialized ONCE to parquet — corpus synthesis is
-  fixture cost, not engine cost. REPL is sized so a timed pass runs several
-  seconds per level: per-pass fixed costs (job scheduling, shuffle setup,
-  AQE stage barriers) are constant, so too-short passes under-measure the
-  big-N level and bias the N→4N efficiency low — a real 100 TB job
-  amortizes those costs over hours.
-- The timed job = read parquet → latest-capture dedup → host-salt
-  repartition → mapInArrow extract → count.
-- **Scaling (sandbox stand-in for N vs 4N executors)**: the same job runs at
-  local[N] and local[4N] on the SAME input, interleaved for TRIALS rounds,
-  and each level is scored by its best docs/sec. Best-of-k is deliberate:
-  this VM is co-tenant-noisy (identical runs vary ±40%; see
-  BENCH/BASELINE.md), and max-of-interleaved-trials estimates each config's
-  capability rather than the neighbors' load. Default pair N=2 vs 4N=8 —
-  measured pure-Python multiprocessing scaling on this box saturates near
-  ~10 busy cores (memory bandwidth), so 8→32 cannot show >2.3× for ANY
-  allocation-heavy workload; on a real cluster each executor adds its own
-  memory bandwidth, which is what N→4N executor scaling assumes.
-- Headline queries run once on the local[CPUS] session.
+- **Cores** are ``get_spark()``'s own default (the process's CPU affinity
+  set), read back as ``sparkContext.defaultParallelism``. One session at
+  that size runs the extract, the headline suite and the extras.
+- **Extract.** The pages corpus (a pure function of documents.parquet,
+  replicated REPL× for volume) is materialized once to parquet, so corpus
+  synthesis is fixture cost, not engine cost. The timed job is
+  ``run_extract``'s plan: read parquet → ``latest_capture(balance_by_url)``
+  → mapInArrow extract → count; one warmup pass (JIT of the scan, shuffle
+  and window codegen), then the best of three.
+- **Headline suite.** ``HEADLINE`` queries, each primed once on the sf0.01
+  set next to the data directory, then best-of-2 at full scale. ``value`` is
+  headline suite seconds plus extract seconds.
+- **Scaling.** The extract runs at local[N] and local[4N], N = cores // 4,
+  each level in a subprocess pinned to the first N CPUs of the affinity
+  set, over TRIALS interleaved trials; ``scaling_efficiency`` is the median
+  of the per-trial ratios. Below 8 cores (N < 2) the pass does not run and
+  the JSON carries ``"scaling_efficiency": null`` plus
+  ``"scaling_unmeasurable"``.
+- **Extras.** Every other ``queries()`` name, in registry order: an sf0.01
+  prime, then one timed pass. Once the wall passes BUDGET seconds the rest
+  are skipped and named.
 
-Budget discipline (round-3 lesson: rc=124 with no JSON; round-4 lesson:
-rc=0 but the driver keeps only a 2000-char stdout TAIL, so a multi-KB
-final line is cut mid-object and parses null). stdout is therefore four
-JSON lines, in order:
-  1. DETAIL core line (headline suite + extract levels + scaling + the
-     full scaling_note prose) — flushed as soon as the core numbers exist;
-  2. COMPACT core line (<1 KB: same core numbers, no prose/runs arrays) —
-     so a driver that kills the process mid-extras still finds one
-     complete object inside its tail window;
-  3. DETAIL superset line (core + per-query extras maps + skip names);
-  4. COMPACT final line (<1 KB: core numbers + extras_timed/extras_skipped
-     counts) — the LAST line, guaranteed to fit whole inside a 2000-char
-     tail, which is what the driver actually parses.
-Extras run between lines 2 and 3 under a wall-clock budget (single timed
-pass each after an sf0.01 prime; remaining names skipped — and named on
-line 3 — once the budget is hit). Humans and tooling read lines 1/3;
-tail-limited drivers read line 4.
+stdout is four JSON lines, in order:
+  1. detail core line (headline suite, extract levels, scaling), flushed
+     before the extras start;
+  2. compact core line, so a run killed mid-extras still ends in one
+     complete object;
+  3. detail final line: core plus the ``extras`` map and skipped names;
+  4. compact final line (< 1.5 KB: core numbers plus ``extras_timed`` /
+     ``extras_skipped``). Readers that keep only a 2000-char stdout tail
+     parse this one.
 
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_REPL (default 80),
-SPARK_GRAFT_BENCH_TRIALS (default 2), SPARK_GRAFT_BENCH_SMALL (default 2),
-SPARK_GRAFT_BENCH_BUDGET (total wall secs, default 810),
-SPARK_GRAFT_BENCH_SKIP_SCALING=1, SPARK_GRAFT_BENCH_SKIP_QUERIES=1,
-SPARK_GRAFT_BENCH_SCALE_RETRIES (extra big-level-only scaling samples
-bought when the estimate lands under 0.8 and budget remains, default 6 —
-a loaded window starves the 4N level first while N stays stable, so
-re-sampling only 4N buys a new load window at ~1/4 the wall of a pair).
+Usage: ``python bench.py``; ``python bench.py --skew`` (zipf-head skew:
+salted vs host-partitioned extract, AQE skew join); ``python bench.py
+--level N`` runs one pinned scaling level and prints its JSON line.
+SPARK_GRAFT_SF_DIR sets the data directory (default: the sf0.1 test set).
 """
 
 from __future__ import annotations
@@ -66,24 +45,23 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-REPL = int(os.environ.get("SPARK_GRAFT_BENCH_REPL", "80"))
-TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "2"))
-SMALL = int(os.environ.get("SPARK_GRAFT_BENCH_SMALL", "2"))
-# Total wall-clock budget: once exceeded, remaining EXTRA* queries are
-# skipped (never the core headline/extract/scaling — those finish first and
-# their JSON line is already flushed by the time extras start). 810 s keeps
-# ~50 s of margin under the slowest KNOWN-good driver wall (r2 ran 859 s to
-# completion) while the r3 run, which had no budget, timed out. Raised from
-# 780 after a loaded-window run where the adaptive scaling retry was denied
-# its last trial at 0.773 for want of ~30 s of budget headroom.
-BUDGET = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "810"))
+PRIME_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+# Replication of the corpus: a timed extract pass runs for seconds, so the
+# per-pass fixed costs (scheduling, shuffle setup) do not dominate it.
+REPL = 80
+TRIALS = 2          # interleaved scaling trials
+BUDGET = 810.0      # wall seconds; extras that would start later are skipped
+SKEW_ROUNDS = 3     # interleaved rounds per mode in --skew
+
+
 def _corpus_tag() -> str:
     """Fingerprint of the corpus-defining sources: the pages cache is a
     pure function of (documents table, corpus code), so a corpus.py edit
@@ -120,199 +98,43 @@ HEADLINE = (
     "sessionize",
 )
 
-# Round-2/3 operators, timed the same way but reported SEPARATELY
-# (queries_r2 / queries_r3) so the headline suite total stays comparable
-# across rounds. Since round 5 these are NOT in the default timed set:
-# every name here has driver-grade (BENCH_r02) or repeated self-measured
-# (BENCH.md) evidence, and the r4 driver run burned its extras budget
-# re-proving them while skipping 82 never-driver-timed names. Set
-# SPARK_GRAFT_BENCH_ALL_EXTRAS=1 to time them too (local validation runs).
-EXTRA = (
-    "embedding_near_dupes_lsh",
-    "curation_verdict",
-    "as_of_join",
-    "range_join_binned",
-    "time_rollup",
-    "vocab_topk",
-    "extract_handwriting",
-    "resume_anti_join_bloom",
-)
 
-EXTRA3 = (
-    "curate_corpus",
-    "image_features",
-    "benchmark_contamination",
-    "domain_mix",
-    "host_link_graph",
-    "host_pagerank",
-    "crawl_diff",
-    "unigram_logprob",
-    "ngram_span_coverage",
-    "semantic_dedup",
-    "anchor_text_stats",
-    "recrawl_schedule",
-    "tfidf_top_terms",
-    "phrase_search",
-    "and_search",
-    "bpe_pair_counts",
-    "dsir_importance",
-    "group_holdout_split",
-    "temperature_mix",
-    "zorder_key",
-    "shingle_novelty",
-    "chunk_documents",
-    "cross_corpus_dedup",
-    "url_filter",
-    "training_batches",
-    "domain_quality",
-    "boilerplate_paragraphs",
-    "oov_rate",
-)
-
-# Round-5 operators — timed FIRST among the extras (zero perf evidence of
-# any kind until this round's runs).
-EXTRA5: tuple[str, ...] = (
-    "event_cooccurrence",
-    "host_pagerank_delta",
-    "source_token_kl",
-    "tpch_local_supplier_revenue",
-    "host_kcore",
-    "host_hits",
-    "interevent_histogram",
-    "heaps_law",
-    "host_communities",
-    "normalize_text_nfkc",
-    "wave_makespan_mix",
-    "community_quarantine",
-    # bpe_learn at sf0.1 is ~5 s warm, nearly all of it the 6 rounds'
-    # fixed scheduling (agg + argmax + checkpoint per round over a
-    # 31-word-type table) — the corpus contributes ONE pass; at real
-    # scale the rounds cost |vocabulary|, not |corpus|.
-    "bpe_learn",
-    "community_budget",
-    # snapshot_gc_report times the icetbl lifecycle itself (3 distributed
-    # appends + compact + expire over a doc_id-only projection).
-    "snapshot_gc_report",
-    # cdc_chunks runs BOTH chunkers (gear-window CDC + fixed 32/24) over
-    # the doc_id%11 slice plus its planted insertion copies.
-    "cdc_chunks",
-    "host_reciprocity",
-    "token_gini",
-    "host_assortativity",
-    "event_transitions",
-    "host_mirrors",
-    "host_seed_distance",
-    "event_stationary",
-    "crawl_reachability",
-    "user_transition_entropy",
-    "state_dwell_stats",
-)
-
-# Round-4 operators the r4 DRIVER run never reached (its budget cut the
-# list after 28 names) — the default timed set, ordered expensive/scale-
-# relevant first so a budget cut on a slow box drops cheap sub-second
-# report queries whose self-measured numbers (BENCH.md) are already
-# boring, not the plans whose cost structure matters.
-# simhash_band_recall / minhash_band_recall stay untimed by design:
-# sample-scale evals (~20 s cold at sf0.1 on this template-clustered
-# corpus — one 8-bit simhash band holds 3058/5000 docs), driver-verified
-# via the sf0.01 oracle instead.
-EXTRA4_NEVER: tuple[str, ...] = (
-    "lsh_precision_eval",
-    "curate_corpus_incremental",
-    "chunk_ann_topk",
-    "family_split",
-    "retrieval_rerank",
-    "bm25_topk",
-    "host_trustrank",
-    "pretraining_export",
-    "dedup_representatives",
-    "nb_quality",
-    "ann_recall_eval",
-    "minhash_accuracy_eval",
-    "simhash_near_pairs",
-    "containment_pairs",
-    "lsh_bucket_histogram",
-    "split_leakage",
-    "remove_dup_spans",
-    "dedup_savings",
-    "contamination_by_source",
-    "bigram_stats",
-    "bigram_logprob",
-    "jaccard_histogram",
-    "dedup_lines",
-    "curation_funnel",
-    "robots_filter",
-    "robots_rule_stats",
-    "crawl_budget",
-    "host_template_entropy",
-    "host_degree_stats",
-    "length_histogram",
-    "compaction_plan",
-    "topic_mix",
-    "shard_plan",
-    "quality_sample",
-    "mix_manifest",
-    "data_budget_plan",
-    "tokenizer_fertility",
-    "dedup_cluster_sizes",
-    "url_aliases",
-    "fix_encoding",
-    "hapax_rate",
-    "packing_efficiency",
-    "encoding_health",
-    "zipf_slope",
-    "quality_deciles",
-    "vocab_coverage",
-)
-
-# Round-4 operators the r4 driver DID time (BENCH_r04 tail carries their
-# numbers) — evidenced, so opt-in only (SPARK_GRAFT_BENCH_ALL_EXTRAS=1),
-# like EXTRA/EXTRA3.
-EXTRA4_TIMED: tuple[str, ...] = (
-    "selection_drift",
-    "filter_attribution",
-    "token_drift",
-    "pii_stats",
-    "shard_manifest",
-    "normalize_text",
-    "bbit_minhash_eval",
-    "weighted_sample",
-    "event_funnel",
-    "retention_cohorts",
-    "host_triangles",
-    "event_anomalies",
-    "bot_suspects",
-    "stratified_sample",
-    "sessionized_funnel",
-    "image_resize",
-    "frame_sample",
-    "fetch_frontier",
-    "quality_confusion",
-    "dedup_methods_overlap",
-    "host_content_entropy",
-    "winnow_near_pairs",
-    "chunk_dedup",
-    "crawl_priority",
-    "host_topic_labels",
-    "wave_makespan",
-    "quality_by_crawl_round",
-    "containment_histogram",
-)
+def extras(names) -> list[str]:
+    """The registry names the headline suite does not time, in order."""
+    return [n for n in names if n not in HEADLINE]
 
 
-def _session(cores: int):
+def scaling_levels(cores: int) -> tuple[int, int] | None:
+    """(N, 4N) with N = cores // 4, or None when N < 2: a one-CPU level
+    shares its CPU with the JVM's own scan, shuffle and GC threads, so the
+    pair would not compare like with like."""
+    small = cores // 4
+    return (small, 4 * small) if small >= 2 else None
+
+
+def scaling_estimate(big_runs: list[float],
+                     small_runs: list[float]) -> tuple[float, list[float]]:
+    """N→4N efficiency from docs/sec samples, one pair per trial: each
+    trial's ratio big / (4 × small) compares two runs made back to back,
+    and the estimate is the median of those ratios. Returns (efficiency,
+    per-trial ratios)."""
+    ratios = [round(b / (4 * s), 3) for b, s in zip(big_runs, small_runs)]
+    return round(statistics.median(ratios), 3), ratios
+
+
+def _session(cores: int | None = None):
+    """A session sized by ``get_spark()`` from the host, or ``local[cores]``.
+    Returns (spark, cores)."""
     from ollama_ocr_spark.session import get_spark
 
-    spark = get_spark(
-        app=f"bench-{cores}", master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 2),
-    )
+    spark = get_spark(app="bench",
+                      master=f"local[{cores}]" if cores else None,
+                      shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return spark, spark.sparkContext.defaultParallelism
 
 
-def materialize_corpus(spark) -> int:
+def materialize_corpus(spark, cores: int) -> int:
     from pyspark.sql import functions as F
 
     from ollama_ocr_spark.operators.extract import synthesize_stage
@@ -326,106 +148,39 @@ def materialize_corpus(spark) -> int:
         docs.crossJoin(reps)
         .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 10_000_000)
         .drop("rep")
-        .repartition(CPUS)
+        .repartition(cores)
     )
     synthesize_stage(replicated).write.mode("overwrite").parquet(PAGES_DIR)
     return spark.read.parquet(PAGES_DIR).count()
 
 
-def _pipeline(spark, cores: int):
-    from ollama_ocr_spark.operators.extract import extract_stage
-    from ollama_ocr_spark.operators.maintenance import balance_by_url, latest_capture
-
-    pages = spark.read.parquet(PAGES_DIR)
-    # One task wave (partitions == cores): measured 91k vs 55-64k docs/s at
-    # local[32] against 2x/4x over-partitioning — each extra wave re-pays
-    # Arrow pipeline spin-up per partition; AQE handles any stragglers.
-    mode = os.environ.get("SPARK_GRAFT_DEDUP", "window")
-    if mode == "none":          # ceiling probe: no dedup at all
-        return extract_stage(pages.coalesce(cores))
-    if mode == "window":
-        return extract_stage(
-            latest_capture(balance_by_url(pages, cores), strategy="window"))
-    # semi dedup: winners computed from a light (url, ts) column-pruned
-    # scan, broadcast back — payload rows never shuffle; coalesce (narrow)
-    # gives the one task wave the repartition used to provide.
-    deduped = latest_capture(pages, broadcast_winners=True)
-    return extract_stage(deduped.coalesce(cores))
-
-
 def timed_extract(spark, cores: int) -> dict:
+    """One pass of ``run_extract``'s plan over the pages corpus."""
+    from ollama_ocr_spark.operators.extract import extract_stage
+    from ollama_ocr_spark.operators.maintenance import (
+        balance_by_url,
+        latest_capture,
+    )
+
     t0 = time.monotonic()
-    n = _pipeline(spark, cores).count()
+    pages = spark.read.parquet(PAGES_DIR)
+    n = extract_stage(latest_capture(balance_by_url(pages, cores))).count()
     secs = time.monotonic() - t0
     return {"docs": n, "secs": round(secs, 3),
             "docs_per_sec": round(n / secs, 1)}
 
 
-def scaling_estimate(big_runs: list[float],
-                     small_runs: list[float]) -> tuple[float, list[float]]:
-    """N→4N efficiency from interleaved docs/sec samples — pure function,
-    unit-tested (tests/test_bench_estimator.py); the semantics here are
-    load-model-bearing, don't change one branch without its test.
-
-    Efficiency per TRIAL first (a trial's big and small runs execute
-    back-to-back in the same co-tenant load window, so the ratio controls
-    for neighbor load), then best trial. The cross-trial composite
-    (best big / 4x best small) understates whenever a loaded window's big
-    level is divided by a quiet window's small level: the 4N level starves
-    first on a shared box (~10 busy cores of real capacity) while N keeps
-    running at full speed. Measured on identical builds: composite 0.62 on
-    a loaded box vs 0.86-0.93 clean; per-trial pairing stays in the honest
-    band either way.
-
-    ``big_runs`` may be LONGER than ``small_runs`` (big-only retry samples
-    append past the paired prefix); zip truncation keeps trial pairing
-    index-exact, and the extra big samples reach the estimate through the
-    composite only.
-
-    A ratio > 1.0 is physically impossible for this workload (no
-    superlinear effect exists) — it flags a window where the SMALL level
-    starved, and is excluded from the capability estimate; the composite
-    gets the same plausibility cap. The two estimators fail in
-    complementary ways (per-trial max: no trial hit a balanced window;
-    composite: big's quietest window still busier than small's), so the
-    estimate is their max — both are legitimate best-of readings of the
-    same engine. Returns (efficiency, per-trial ratios).
-    """
-    ratios = [
-        round(b / (4 * s), 3) for b, s in zip(big_runs, small_runs)
-    ]
-    valid = [r for r in ratios if r <= 1.0] or ratios
-    composite = round(max(big_runs) / (4 * max(small_runs)), 3)
-    ests = [max(valid)] + ([composite] if composite <= 1.0 else [])
-    return max(ests), ratios
+def best_extract(spark, cores: int, passes: int) -> dict:
+    """One warmup pass, then the fastest of ``passes`` timed passes."""
+    timed_extract(spark, cores)
+    return max((timed_extract(spark, cores) for _ in range(passes)),
+               key=lambda r: r["docs_per_sec"])
 
 
-def scaling_median(ratios: list[float]) -> float:
-    """Median of the plausible (<= 1.0) per-trial ratios — reported NEXT TO
-    the best-of headline so readers see the spread behind it (the best-of
-    procedure is one-sided by design: retries can only raise it, so the
-    median is the honest companion number). Falls back to the median of
-    all ratios when every window starved the small level."""
-    import statistics
-
-    valid = [r for r in ratios if r <= 1.0] or ratios
-    return round(statistics.median(valid), 3)
-
-
-def bench_level(cores: int, warm_rows: int = 20000) -> dict:
-    """Run one pinned-level trial in a subprocess.
-
-    ``sched_setaffinity`` restricts the CHILD (and its forked JVM + Python
-    workers) to exactly ``cores`` CPUs — without pinning, local[N] only
-    limits task slots while the JVM's scan/shuffle/GC threads spill onto
-    every core, which silently inflates small-N throughput and makes the
-    N→4N comparison meaningless on a single box.
-    """
-    import subprocess
-
+def bench_level(cores: int) -> dict:
+    """Run one scaling level in a subprocess (see :func:`_run_level`)."""
     proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--level", str(cores),
-         str(warm_rows)],
+        [sys.executable, os.path.abspath(__file__), "--level", str(cores)],
         capture_output=True, text=True,
     )
     line = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else ""
@@ -436,57 +191,33 @@ def bench_level(cores: int, warm_rows: int = 20000) -> dict:
     return json.loads(line)
 
 
-def _least_loaded_cores(n: int, sample: float = 0.4) -> set[int]:
-    """Pick the n most-idle CPUs from a /proc/stat delta.
-
-    Pinning to range(n) makes the whole measurement hostage to whether a
-    co-tenant happens to sit on the LOW-numbered cores: observed unpinned
-    local[32] at 94.7k docs/s while cores 0-7 (pinned) delivered 40k —
-    the capacity existed, just not there.
-    """
-
-    def snap() -> dict[int, tuple[int, int]]:
-        out = {}
-        with open("/proc/stat") as fh:
-            for line in fh:
-                if line.startswith("cpu") and line[3:4].isdigit():
-                    p = line.split()
-                    cpu = int(p[0][3:])
-                    vals = list(map(int, p[1:]))
-                    out[cpu] = (sum(vals), vals[3] + vals[4])  # total, idle+iowait
-        return out
-
-    a = snap()
-    time.sleep(sample)
-    b = snap()
-    idle = {
-        c: (b[c][1] - a[c][1]) / max(1, b[c][0] - a[c][0]) for c in b if c in a
-    }
-    return set(sorted(idle, key=lambda c: -idle[c])[:n])
-
-
-def _run_level(cores: int, warm_rows: int) -> None:
-    os.sched_setaffinity(0, _least_loaded_cores(cores))
-    spark = _session(cores)
-    from ollama_ocr_spark.operators.extract import extract_stage
-
-    pages = spark.read.parquet(PAGES_DIR)
-    extract_stage(pages.limit(warm_rows)).count()  # worker/codegen warmup
-    # One full-pipeline warmup pass, then best-of-2: measured ramp on this
-    # box is 34k -> 48k -> 60k docs/s over consecutive identical passes
-    # (JVM C2 compiling the scan/shuffle/window codegen) — timing the first
-    # pass measures JIT, not the engine; best-of also rides out the
-    # co-tenant bursts (±30% between identical steady-state passes).
-    # Best-of-2 (was 3): the small pinned level pays ~25 s per pass, and the
-    # r3 driver bench timed out — the third pass bought little (the ramp is
-    # done after the warmup pass) at a third of the level's wall cost.
-    timed_extract(spark, cores)
-    out = max(
-        (timed_extract(spark, cores) for _ in range(2)),
-        key=lambda r: r["docs_per_sec"],
-    )
+def _run_level(cores: int) -> None:
+    """Pin this process (and the JVM and Python workers it forks) to the
+    first ``cores`` CPUs of its affinity set, then time the extract: without
+    pinning, local[N] only limits task slots while the JVM's own threads
+    spread over every core, inflating the small level."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cores])
+    spark, _ = _session(cores)
+    out = best_extract(spark, cores, passes=2)
     spark.stop()
     print(json.dumps(out))
+
+
+def run_scaling(small: int, big: int) -> dict[int, list[float]]:
+    """docs/sec per level over TRIALS interleaved trials. The order of the
+    two levels alternates, so drift across a trial does not always favour
+    the level that runs second."""
+    runs: dict[int, list[float]] = {small: [], big: []}
+    for trial in range(TRIALS):
+        for cores in ((big, small) if trial % 2 == 0 else (small, big)):
+            runs[cores].append(bench_level(cores)["docs_per_sec"])
+    return runs
+
+
+def _time_query(spark, fn, sf_dir: str) -> float:
+    t0 = time.monotonic()
+    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.monotonic() - t0
 
 
 def _run_skew() -> None:
@@ -494,30 +225,27 @@ def _run_skew() -> None:
     (h0 owns 50% of captures) is the adversarial input. Times the CPU-heavy
     extract stage over (a) NAIVE host-partitioned input — the mega-host
     serializes on one task — vs (b) salted (host, salt) partitioning, on
-    the same materialized corpus, interleaved best-of-2 per mode; also
-    verifies AQE's skew-join split engages on a host-keyed join. Prints one
-    JSON line."""
+    the same materialized corpus, interleaved per round; also verifies
+    AQE's skew-join split engages on a host-keyed join. Prints one JSON
+    line."""
     import re
-
-    from pyspark.sql import functions as F
 
     from ollama_ocr_spark.operators.extract import extract_stage
     from ollama_ocr_spark.operators.maintenance import host_expr, salt_by_host
 
-    spark = _session(CPUS)
-    materialize_corpus(spark)
+    spark, cores = _session()
+    materialize_corpus(spark, cores)
     pages = spark.read.parquet(PAGES_DIR)
 
     def naive():
-        return extract_stage(pages.repartition(CPUS, host_expr()))
+        return extract_stage(pages.repartition(cores, host_expr()))
 
     def salted():
-        return extract_stage(salt_by_host(pages, CPUS))
+        return extract_stage(salt_by_host(pages, cores))
 
     naive().count()  # JIT/codegen warmup covers both plan shapes
     times: dict[str, list[float]] = {"host_partitioned": [], "salted": []}
-    rounds = int(os.environ.get("SPARK_GRAFT_SKEW_ROUNDS", "3"))
-    for _ in range(rounds):  # interleaved so co-tenant load hits both modes
+    for _ in range(SKEW_ROUNDS):
         for label, build in (("host_partitioned", naive),
                              ("salted", salted)):
             t0 = time.monotonic()
@@ -544,9 +272,6 @@ def _run_skew() -> None:
     plan = j._jdf.queryExecution().executedPlan().toString()
     best_naive = min(times["host_partitioned"])
     best_salted = min(times["salted"])
-    # per-round pairing controls for co-tenant load (same estimator logic
-    # as the N->4N scaling pair): each round's naive and salted run
-    # back-to-back in the same load window
     per_round = [
         round(n / s, 3)
         for n, s in zip(times["host_partitioned"], times["salted"])
@@ -564,233 +289,82 @@ def _run_skew() -> None:
 
 
 def main() -> None:
+    import __spark_entry__ as entry
+
     t_start = time.monotonic()
+    spark, cores = _session()
+    n_pages = materialize_corpus(spark, cores)
+    ext = best_extract(spark, cores, passes=3)
 
-    # -- pass 1: local[CPUS] — corpus + headline queries + full-box extract --
-    spark = _session(CPUS)
-    n_pages = materialize_corpus(spark)
-    timed_extract(spark, CPUS)  # warmup
-    # best-of-3, same estimator as every query: a single pass is hostage to
-    # whichever co-tenant load window it lands in (observed 3.7s vs 12.8s
-    # for identical code)
-    ext_full = max(
-        (timed_extract(spark, CPUS) for _ in range(3)),
-        key=lambda r: r["docs_per_sec"],
-    )
-
-    qtimes: dict[str, float] = {}
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES"):
-        import __spark_entry__ as entry
-
-        qs = entry.queries()
-        # Priming pass at sf0.01: identical plan shapes compile every
-        # query's whole-stage codegen and give C2 enough invocations to
-        # JIT the hot expression paths (~15s total). Cold single-pass
-        # timing otherwise measures the JIT, not the engine — observed
-        # 41.5s -> ~3s on the shingle-heavy jaccard query between a cold
-        # and a warmed pass of the SAME plan. Each timed query then runs
-        # best-of-2 fresh plans (rebuilt per pass — reusing one DataFrame
-        # would skip stages via shuffle reuse): best-of rides out the
-        # ±30-40% co-tenant bursts, same estimator the extract levels use.
-        for name in HEADLINE:
-            qs[name](spark, "/root/testdata/sf0.01").write.mode(
-                "overwrite").format("noop").save()
-        for name in HEADLINE:
-            passes = []
-            for _ in range(2):
-                t0 = time.monotonic()
-                qs[name](spark, SF_DIR).write.mode("overwrite").format(
-                    "noop").save()
-                passes.append(time.monotonic() - t0)
-            qtimes[name] = round(min(passes), 3)
-    spark.stop()
-
-    # -- pass 2: N vs 4N interleaved trials, best-of-k per level ------------
-    levels: dict[int, list] = {}
-    scaling = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING") != "1":
-        big = SMALL * 4
-        trial_walls: list[float] = []
-        level_walls: dict[int, list[float]] = {}
-
-        def run_level(cores: int) -> None:
-            t0 = time.monotonic()
-            levels.setdefault(cores, []).append(bench_level(cores))
-            level_walls.setdefault(cores, []).append(time.monotonic() - t0)
-
-        def run_trial() -> None:
-            # Alternate which level runs first: within a trial the two
-            # levels sample ADJACENT load windows, so monotonically
-            # decaying (or ramping) co-tenant load with a fixed order
-            # systematically favors whichever level always runs second.
-            # Alternation turns that drift into symmetric noise across
-            # trials instead of a one-directional ratio bias.
-            order = (big, SMALL) if len(trial_walls) % 2 == 0 else (SMALL, big)
-            t0 = time.monotonic()
-            for cores in order:
-                run_level(cores)
-            trial_walls.append(time.monotonic() - t0)
-
-        def estimate() -> tuple[float, list[float]]:
-            return scaling_estimate(
-                [r["docs_per_sec"] for r in levels[big]],
-                [r["docs_per_sec"] for r in levels[SMALL]],
-            )
-
-        for _ in range(TRIALS):
-            run_trial()
-        scaling, per_trial = estimate()
-        # Adaptive retry: both base trials can land in loaded co-tenant
-        # windows (observed 0.655/0.529 on the same build that reads 0.875
-        # in a quiet window — the 4N level starves first, biasing the
-        # ratio LOW, never high). When the estimate sits below the 0.8
-        # capability threshold and the wall budget still fits another
-        # interleaved pair (cost projected from measured trial walls,
-        # keeping 60s of headroom for the core-line flush), buy one more
-        # load window. Quiet-window runs pay nothing; the retry can only
-        # raise a best-of estimate, never lower it.
-        retries = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_RETRIES", "6"))
-        # Retries re-sample ONLY the 4N level: a loaded window starves 4N
-        # first (the pinned-N level needs just N quiet cores and reads
-        # stable across loaded trials — observed 13.1/14.7/14.3k at N=2
-        # while 4N ramped 17->28->32k vs 67k clean), so the sub-0.8 case
-        # is a starved BIG sample, and a big-only retry feeds the
-        # cross-trial composite at ~1/4 the wall of a full pair — the
-        # same budget headroom buys 3-4x more load windows. Appending
-        # past the paired prefix is safe: the per-trial zip truncates to
-        # len(levels[SMALL]), keeping trial pairing index-exact.
-        while (
-            scaling < 0.80
-            and retries > 0
-            and time.monotonic() - t_start + max(level_walls[big])
-            < BUDGET - 60
-        ):
-            retries -= 1
-            run_level(big)
-            scaling, per_trial = estimate()
+    # The sf0.01 prime compiles each plan's codegen and warms the JIT, so
+    # the timed passes measure the engine rather than the compiler.
+    qs = entry.queries()
+    for name in HEADLINE:
+        _time_query(spark, qs[name], PRIME_DIR)
+    qtimes = {
+        name: round(min(_time_query(spark, qs[name], SF_DIR)
+                        for _ in range(2)), 3)
+        for name in HEADLINE
+    }
 
     out = {
-        "metric": "extracted docs/sec (pipeline: dedup+salt+mapInArrow extract), "
-                  "headline suite secs, N->4N scaling efficiency",
-        "value": round(sum(qtimes.values()) + ext_full["secs"], 3),
+        "metric": "extracted docs/sec (run_extract plan: url-hash dedup + "
+                  "mapInArrow extract), headline suite secs, N->4N scaling "
+                  "efficiency",
+        "value": round(sum(qtimes.values()) + ext["secs"], 3),
         "unit": "sec",
-        "queries": {**qtimes, "extract_pipeline": ext_full["secs"]},
+        "queries": {**qtimes, "extract_pipeline": ext["secs"]},
         "sf": SF_DIR,
+        "cores": cores,
         "pages_rows": n_pages,
-        "extract": {
-            f"local[{CPUS}]": ext_full,
-            **{
-                f"local[{c}]": {
-                    "best_docs_per_sec": max(r["docs_per_sec"] for r in runs),
-                    "runs": [r["docs_per_sec"] for r in runs],
-                }
-                for c, runs in levels.items()
-            },
-        },
-        **({"scaling_efficiency": scaling,
-            "scaling_per_trial": per_trial,
-            "scaling_median": scaling_median(per_trial)}
-           if scaling is not None else {}),
-        "scaling_note": (
-            "pinned-CPU (sched_setaffinity) N vs 4N, JIT-warmed "
-            f"best-of-2 passes x {len(per_trial) if scaling else TRIALS} "
-            "interleaved trials (budget-gated extra BIG-ONLY samples "
-            "bought when the estimate lands under 0.8 — a loaded window "
-            "starves the 4N level first, biasing the ratio low, never "
-            "high, while the N level stays stable); efficiency = "
-            "max of TWO best-of estimators with complementary failure "
-            "modes: (a) best per-trial ratio (big and small run "
-            "back-to-back in the same co-tenant load window, so the ratio "
-            "controls for neighbor load) and (b) cross-trial composite "
-            "(best big / 4x best small); ratios > 1.0 are physically "
-            "impossible here and excluded from BOTH estimators as "
-            "starved-small-level artifacts. This VM is co-tenant-noisy "
-            "(±30-40% between identical runs). The pure-Python kernel "
-            "itself scales ~1.0 to 8 procs (11.2k/21.2k/45.0k/89.0k "
-            "docs/s at 1/2/4/8 — see BENCH.md)"
-        ),
-        "bench_wall_secs": round(time.monotonic() - t_start, 1),
+        "extract": {f"local[{cores}]": ext},
     }
-    # DETAIL core line: complete and round-comparable on its own. Flushed
-    # NOW so a driver timeout during the extras below still leaves the full
-    # story (round 3 had rc=124 and NO perf evidence at all).
+    levels = scaling_levels(cores)
+    if levels is None:
+        out["scaling_efficiency"] = None
+        out["scaling_unmeasurable"] = f"{cores} cores"
+    else:
+        small, big = levels
+        runs = run_scaling(small, big)
+        for c, r in runs.items():
+            out["extract"][f"local[{c}]"] = {"best_docs_per_sec": max(r),
+                                             "runs": r}
+        out["scaling_efficiency"], out["scaling_per_trial"] = \
+            scaling_estimate(runs[big], runs[small])
+        out["scaling_note"] = (
+            f"local[{small}] vs local[{big}], each pinned to the first CPUs "
+            f"of the affinity set; median of {TRIALS} interleaved trials, "
+            "each level best-of-2 after a warmup pass"
+        )
+    out["bench_wall_secs"] = round(time.monotonic() - t_start, 1)
     print(json.dumps(out), flush=True)
-    # COMPACT core line: <1 KB, so a mid-extras kill leaves one COMPLETE
-    # object inside a 2000-char stdout tail (the detail line alone is
-    # multi-KB and would be cut at its head).
     print(json.dumps(_compact(out)), flush=True)
 
-    # -- pass 3: extras under the wall-clock budget -------------------------
-    # Single timed pass per query after an sf0.01 prime (best-of-2 made the
-    # r3 driver run time out); queries are per-suite priority-ordered
-    # (round-5 first, then the round-4 names the r4 driver never reached)
-    # and the remainder is skipped — and named — once BUDGET is exceeded.
-    # Already-driver-evidenced suites (EXTRA4_TIMED/EXTRA/EXTRA3) are
-    # opt-in via SPARK_GRAFT_BENCH_ALL_EXTRAS=1.
-    qtimes_r2: dict[str, float] = {}
-    qtimes_r3: dict[str, float] = {}
-    qtimes_r4: dict[str, float] = {}
-    qtimes_r5: dict[str, float] = {}
+    timed: dict[str, float] = {}
     skipped: list[str] = []
-    if not os.environ.get("SPARK_GRAFT_BENCH_SKIP_QUERIES"):
-        spark = _session(CPUS)
-        import __spark_entry__ as entry
+    for name in extras(qs):
+        if time.monotonic() - t_start > BUDGET:
+            skipped.append(name)
+            continue
+        _time_query(spark, qs[name], PRIME_DIR)
+        timed[name] = round(_time_query(spark, qs[name], SF_DIR), 3)
+    spark.stop()
 
-        qs = entry.queries()
-        # One UNTIMED full-scale pass before the loop: the session is
-        # fresh, and the first timed extra otherwise absorbs the C2 JIT
-        # ramp for the shared scan/shuffle/codegen infrastructure
-        # (measured: bigram_logprob read 11.7 s as the first extra vs
-        # 3.6 s warm — a 3.3x artifact of list position, not plan cost).
-        # Pinned to retrieval_rerank (not the list head) so list
-        # reordering can't silently swap the warmup to a cheap query that
-        # compiles little of the shared text/shuffle/Arrow infrastructure.
-        qs["retrieval_rerank"](spark, SF_DIR).write.mode("overwrite").format(
-            "noop").save()
-        suites = [(EXTRA5, qtimes_r5), (EXTRA4_NEVER, qtimes_r4)]
-        if os.environ.get("SPARK_GRAFT_BENCH_ALL_EXTRAS"):
-            suites += [(EXTRA4_TIMED, qtimes_r4), (EXTRA, qtimes_r2),
-                       (EXTRA3, qtimes_r3)]
-        for names, sink in suites:
-            for name in names:
-                if time.monotonic() - t_start > BUDGET:
-                    skipped.append(name)
-                    continue
-                qs[name](spark, "/root/testdata/sf0.01").write.mode(
-                    "overwrite").format("noop").save()  # prime
-                t0 = time.monotonic()
-                qs[name](spark, SF_DIR).write.mode("overwrite").format(
-                    "noop").save()
-                sink[name] = round(time.monotonic() - t0, 3)
-        spark.stop()
-
-    out["queries_r2"] = qtimes_r2
-    out["queries_r3"] = qtimes_r3
-    out["queries_r4"] = qtimes_r4
-    out["queries_r5"] = qtimes_r5
+    out["extras"] = timed
     if skipped:
         out["extras_skipped_on_budget"] = skipped
     out["bench_wall_secs"] = round(time.monotonic() - t_start, 1)
-    n_timed = sum(len(s) for s in (qtimes_r2, qtimes_r3, qtimes_r4,
-                                   qtimes_r5))
-    # DETAIL superset line (per-query extras maps + skip names) for humans
-    # and tooling...
     print(json.dumps(out), flush=True)
-    # ...then the COMPACT final line LAST: the driver keeps only a
-    # 2000-char stdout tail, and this is the one line guaranteed to sit
-    # complete inside it (BENCH_r03 rc=124 / BENCH_r04 parsed:null were
-    # both this contract being violated).
     print(json.dumps(
-        _compact(out, extras_timed=n_timed, extras_skipped=len(skipped))
+        _compact(out, extras_timed=len(timed), extras_skipped=len(skipped))
     ), flush=True)
 
 
 def _compact(detail: dict, extras_timed: int | None = None,
              extras_skipped: int | None = None) -> dict:
-    """Core numbers only, guaranteed to serialize < ~1.5 KB: the driver
-    retains a 2000-char stdout TAIL, so the LAST printed line must be a
-    complete JSON object well under that. Per-query extras maps, runs
-    arrays and the scaling_note prose live on the detail lines only."""
+    """Core numbers only, serialized under 1.5 KB so the line fits whole in
+    a 2000-char stdout tail. The extras map, runs arrays and the scaling
+    note live on the detail lines only."""
     compact = {
         "metric": detail["metric"],
         "value": detail["value"],
@@ -798,26 +372,25 @@ def _compact(detail: dict, extras_timed: int | None = None,
         "sf": detail["sf"],
         "queries": detail["queries"],
         "extract_docs_per_sec": {
-            lvl: (v["docs_per_sec"] if "docs_per_sec" in v
-                  else v["best_docs_per_sec"])
+            lvl: v.get("docs_per_sec", v.get("best_docs_per_sec"))
             for lvl, v in detail["extract"].items()
         },
         **{k: detail[k] for k in
-           ("scaling_efficiency", "scaling_per_trial", "scaling_median")
+           ("scaling_efficiency", "scaling_per_trial", "scaling_unmeasurable")
            if k in detail},
         "bench_wall_secs": detail["bench_wall_secs"],
     }
     if extras_timed is not None:
         compact["extras_timed"] = extras_timed
         compact["extras_skipped"] = extras_skipped
-    if len(json.dumps(compact)) > 1500:  # belt-and-braces: never exceed
-        compact.pop("queries")           # the tail window
+    if len(json.dumps(compact)) > 1500:  # never exceed the tail window
+        compact.pop("queries")
     return compact
 
 
 if __name__ == "__main__":
     if len(sys.argv) >= 3 and sys.argv[1] == "--level":
-        _run_level(int(sys.argv[2]), int(sys.argv[3]) if len(sys.argv) > 3 else 20000)
+        _run_level(int(sys.argv[2]))
     elif len(sys.argv) >= 2 and sys.argv[1] == "--skew":
         _run_skew()
     else:

@@ -246,8 +246,7 @@ def golden_text_expr(doc_id_col: str = "doc_id", text_col: str = "text"):
 
 
 def latest_capture(pages: DataFrame, key: str = "url",
-                   ts: str = "warc_ts", strategy: str = "window",
-                   broadcast_winners: bool = False) -> DataFrame:
+                   ts: str = "warc_ts", strategy: str = "window") -> DataFrame:
     """Keep the newest capture per url (N3).
 
     ``strategy="window"`` (default): ``row_number`` over (key → ts desc).
@@ -262,9 +261,9 @@ def latest_capture(pages: DataFrame, key: str = "url",
     ``strategy="semi"``: winners = ``groupBy(key).max(ts)`` over the two
     LIGHT columns only (HashAggregate with map-side partial combine — the
     parquet scan for this branch prunes to key+ts), then a ``left_semi``
-    join back to the full rows. With ``broadcast_winners=True`` (or when
-    AQE sizes the winner set under its threshold) this becomes a
-    BroadcastHashJoin(semi): payload rows are NEVER shuffled or sorted.
+    join back to the full rows. When AQE sizes the winner set under its
+    broadcast threshold this becomes a BroadcastHashJoin(semi): payload
+    rows are NEVER shuffled or sorted.
     Use when the unique-key count is known-bounded (resume over a finite
     crawl list, bounded-url recrawl) — the driver round-trip + relation
     build costs more than the shuffle at small scale, but at scale the
@@ -272,16 +271,9 @@ def latest_capture(pages: DataFrame, key: str = "url",
     Keeps every row tied for max ts, so keys must have distinct ts
     (corpus timestamps are: stale captures are 1h older,
     corpus.capture_rows).
-
-    ``broadcast_winners=True`` force-hints the broadcast when the caller
-    knows the unique-key count is small relative to executor memory (AQE's
-    adaptive threshold is conservative and won't broadcast a winner set it
-    sizes above ~10 MB even when it trivially fits).
     """
     if strategy == "semi":
         winners = pages.groupBy(key).agg(F.max(ts).alias(ts))
-        if broadcast_winners:
-            winners = F.broadcast(winners)
         return pages.join(winners, [key, ts], "left_semi")
     w = Window.partitionBy(key).orderBy(F.col(ts).desc())
     return (

@@ -63,10 +63,8 @@ def repair_metrics(spark: SparkSession, results_tbl: IceTable,
             continue
         snap = results_tbl.snapshot(sid)
         parent = results_tbl.snapshot(snap.parent) if snap.parent else None
-        new_files = [
-            f for f in snap.files
-            if parent is None or f not in set(parent.files)
-        ]
+        parent_files = set(parent.files) if parent else set()
+        new_files = [f for f in snap.files if f not in parent_files]
         if not new_files:
             continue
         delta = spark.read.parquet(*new_files)

@@ -7,12 +7,11 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -62,8 +61,7 @@ def main() -> int:
     from ollama_ocr_spark.sources.testdata import TABLES
 
     only = set(sys.argv[1:])
-    spark = get_spark(app="check-oracle", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app="check-oracle")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
